@@ -1,25 +1,18 @@
 #!/usr/bin/env python3
-"""Benchmark runner — driver contract (BASELINE.md).
+"""Ungated per-query timer for the headline queries.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+The gated benchmark is perfbench (``python3 perfbench/run.py --workload W
+--seed N --seconds S``, declared in BENCHMARK.json). This script times the
+headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata) on
+local[$SPARK_GRAFT_CPUS], writes the record to BENCH.json and prints it as
+ONE JSON line:
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+     "parallelism": {...}}
 
 Each query is fully materialized through the noop sink (no driver-side
 collect — executor-complete wall time, the number that scales). One shared
 SparkSession for the whole run: JVM startup would otherwise dominate at
 sf0.1.
-
-The stdout JSON line is kept COMPACT (r14 verdict item 1): the driver
-captures a bounded tail of the run's output, and the old ~3 KB line
-(verbose guard strings + both comparable query lists) outran it twice —
-BENCH_r12/r13 recorded ``parsed: null`` and PERF_r14 could compute no
-round-over-round table. The full self-describing record (verbose
-second-pass reasons, both comparable lists) is written to BENCH.json
-next to this script instead; stdout carries the contract fields plus
-compact summaries, including PROOF of the core count the run actually
-used (``parallelism``: resolved master + defaultParallelism — r14's
-``suspect_cpus_ignored`` false-positived for lack of exactly this).
 """
 
 from __future__ import annotations
@@ -50,53 +43,26 @@ HEADLINE = [
     "text_tfidf_vocab",           # explode-heavy text agg
     "text_lang_id_ngram",         # multi-stage text classifier
     "stream_session_window_twin",  # session windows
-    # r5 additions (r4 verdict item 6): the three worst sub-linear scaling
-    # ratios from SCALING.md — pair-generating jobs whose candidate sets
-    # grow super-linearly in corpus density — now tracked round-over-round.
-    # NOTE: the 13-query r1–r4 total is comparable via sum(queries) minus
-    # these three; per-query timings stay directly comparable.
+    # the worst sub-linear SCALING.md ratios: pair-generating jobs whose
+    # candidate sets grow super-linearly in corpus density
     "text_minhash_containment",   # shared-shingle containment pairs
     "dedup_minhash_estimate_error",  # LSH estimate vs exact Jaccard
     "graph_triangle_count",       # degree-oriented triangle counting
-    # r6 additions (r5 verdict item 4): the two worst SCALING.md ratios
-    # (4.42× and 4.04× under 10× data) now headline-tracked. The 13-query
-    # r1–r4 / 16-query r5 totals stay comparable via sum(queries) minus
-    # the later additions; per-query timings compare directly.
     "dedup_semantic_embedding",   # corpus-adaptive SemDeDup cells
     "agg_ols_two_features",       # decimal(38) moment-sum OLS
-    # r7 additions (r6 verdict item 3): the round's heaviest r6 additions —
-    # slowest absolute query in SCALING.md and the MMR pool window — now
-    # headline-tracked. Earlier totals stay comparable via sum(queries)
-    # minus later additions; per-query timings compare directly.
     "graph_kcore_hindex",         # iterated h-index k-core
     "sim_mmr_diversified_topk",   # MMR re-rank over candidate pool
-    # r9 addition: the composed BM25->RRF->MMR serving pipeline — the
-    # heaviest r9 query and the end-to-end retrieval flagship. Earlier
-    # totals stay comparable via sum(queries) minus later additions;
-    # per-query timings compare directly.
-    "sim_retrieval_stack_topk",
-    # r12 additions (r11 verdict item 6): the heaviest r11 queries —
-    # the ingest-time curation funnel, the tokenizer-aware packing
-    # pipeline, the fixed-merge-table BPE replay, and the streamable
-    # ingest gate (the worst r11 SCALING ratio) — now tracked
-    # round-over-round. Earlier totals stay comparable via sum(queries)
-    # minus later additions; per-query timings compare directly.
+    "sim_retrieval_stack_topk",   # composed BM25->RRF->MMR serving stack
+    # the heaviest curation / tokenization pipelines
     "data_curation_incremental",
     "data_tokenize_pack_pipeline",
     "text_bpe_library_apply",
     "dedup_incremental_gate",
-    # r15 addition (r14 verdict item 6): the full quality->exact->near
-    # curation funnel — the repo's slowest query, optimized this round
-    # (shared signature pass + survivor materialization, A/B 0.66×) and
-    # now tracked round-over-round. Earlier totals stay comparable via
-    # sum(queries) minus later additions; per-query timings compare
-    # directly.
     "data_curation_pipeline",
 ]
 
-#: round-3 additions measured by scripts/scaling_check.py and plan-dumped
-#: by scripts/dump_plans.py (not part of the driver-facing headline wall
-#: number, which stays comparable across rounds).
+#: further queries timed by scripts/scaling_check.py and plan-dumped by
+#: scripts/dump_plans.py; not part of the headline total.
 EXTRA = [
     "text_token_entropy",
     "data_curriculum_order",
@@ -225,174 +191,6 @@ EXTRA = [
 ]
 
 
-#: The PREVIOUS round's headline list — BENCH_r11's 21 queries (the
-#: headline set was unchanged r9-r11, so this is also r9/r10's list;
-#: the four r12 HEADLINE promotions are EXCLUDED here by construction,
-#: which is the point). The emitted `comparable` block subtotals the
-#: intersection with the current HEADLINE so round-over-round comparison
-#: is self-describing (r9 verdict finding 2: r9's printed 26.96 s total
-#: included the new 21st query; the honest round-over-round number was
-#: the identical-20 subset's 22.81 s, which only BENCHNOTES.md
-#: recorded).
-PREV_ROUND_HEADLINE = [
-    "agg_pricing_summary",
-    "scan_parquet_checksum",
-    "join_broadcast_star_revenue",
-    "join_inner_revenue_by_customer",
-    "join_asof_purchase_last_click",
-    "window_topn_revenue_per_segment",
-    "dedup_exact_sha",
-    "dedup_minhash_lsh",
-    "sim_topk_bruteforce",
-    "sim_ann_lsh_bucketed",
-    "text_tfidf_vocab",
-    "text_lang_id_ngram",
-    "stream_session_window_twin",
-    "text_minhash_containment",
-    "dedup_minhash_estimate_error",
-    "graph_triangle_count",
-    "dedup_semantic_embedding",
-    "agg_ols_two_features",
-    "graph_kcore_hindex",
-    "sim_mmr_diversified_topk",
-    "sim_retrieval_stack_topk",
-]
-
-
-def comparable_subtotal(
-    timings: dict[str, float], prev_names: list[str]
-) -> tuple[list[str], float]:
-    """The identical-set subtotal vs the previous round's headline list —
-    pure so tests/test_bench_guards.py can pin it over fixtures."""
-    names = [n for n in prev_names if n in timings]
-    return names, round(sum(timings[n] for n in names), 3)
-
-
-#: Canary-drift auto-remeasure trigger (r8 verdict item 3): r8 shipped
-#: +16% host-contaminated numbers because the old 20% trigger never fired.
-#: 10% is above the canary's quiet-host jitter (measured ±6% min-of-3 on
-#: repeated idle runs) but below every observed contamination episode
-#: (r6: +21%, r8: +16%).
-CANARY_DRIFT_TRIGGER = 0.10
-#: Second tripwire (r8 verdict item 3): the same-round SCALING table
-#: re-measures most headline queries minutes apart from BENCH; in r8 the
-#: two disagreed query-by-query (join_inner 1.447 s SCALING vs 1.570 s
-#: BENCH) which is exactly the host-load signature. If any headline
-#: query's BENCH time exceeds its recorded SCALING sf0.1 time by >25%,
-#: the pass re-runs. A stale-high SCALING reference can only SUPPRESS the
-#: trigger (safe direction); a quiet-host reference catches a noisy BENCH.
-SCALING_DISAGREE_TRIGGER = 0.25
-
-
-def parse_scaling_reference(path: str) -> dict[str, float]:
-    """Per-query sf0.1 wall seconds from SCALING.md's table, located by
-    HEADER NAME (r9 ADVICE: the old positional col-3 parse would silently
-    read the wrong column if scaling_check.py ever added/reordered one).
-    Missing file, missing header, or unparseable rows → empty/partial
-    dict (guard skips)."""
-    ref: dict[str, float] = {}
-    if not os.path.exists(path):
-        return ref
-    target_idx = None
-    with open(path) as fh:
-        for line in fh:
-            if not line.startswith("|"):
-                # r11: STOP at the end of the first table — later tables
-                # (the splittable-scan twin) carry different columns at
-                # the same index and would silently poison the reference.
-                if target_idx is not None:
-                    break
-                continue
-            cells = [c.strip() for c in line.strip().strip("|").split("|")]
-            if target_idx is None:
-                # first table line must be the header; find 'sf0.1 (s)'
-                if "sf0.1 (s)" not in cells:
-                    return ref
-                target_idx = cells.index("sf0.1 (s)")
-                continue
-            if len(cells) <= target_idx or set(cells[0]) <= {"-", " "}:
-                continue  # separator row or malformed
-            try:
-                ref[cells[0]] = float(cells[target_idx])
-            except ValueError:
-                pass
-    return ref
-
-
-def parse_scaling_provenance(path: str) -> float | None:
-    """SCALING.md's own canary drift (written by scripts/scaling_check.py
-    since r10) as a fraction, or None when the file predates provenance.
-    The SCALING-disagree guard needs the reference to be a QUIET-host
-    measurement: a reference taken on an already-contaminated host is
-    inflated and suppresses the guard in the same direction as the
-    stale-high case (r9 ADVICE)."""
-    if not os.path.exists(path):
-        return None
-    m_line = re.compile(r"^Canary: .*drift ([+-]?[0-9.]+)%")
-    with open(path) as fh:
-        for line in fh:
-            m = m_line.match(line)
-            if m:
-                try:
-                    return float(m.group(1)) / 100.0
-                except ValueError:
-                    return None
-    return None
-
-
-def scaling_reference_trusted(scaling_drift: float | None) -> bool:
-    """Whether SCALING.md's sf0.1 column may serve as the disagree
-    guard's reference. Symmetric bar (r10 ADVICE): a large NEGATIVE
-    canary drift means the pre bracket ran cold, so every reference
-    cell is inflated — the exact direction that silently disarms the
-    guard — and must be distrusted just like a degraded-host positive
-    drift. Contrast with second_pass_reasons' canary rule, which stays
-    DIRECTIONAL: there the question is "did the host degrade while this
-    pass measured", and a faster-direction drift is benign warm-up."""
-    return scaling_drift is not None and abs(scaling_drift) <= CANARY_DRIFT_TRIGGER
-
-
-def second_pass_reasons(
-    drift: float,
-    timings: dict[str, float],
-    scaling_ref: dict[str, float],
-    sf: float,
-) -> list[str]:
-    """Pure guard decision (tested over recorded fixtures in
-    tests/test_bench_guards.py). Non-empty → the measured pass is
-    suspect and must be merged with a re-run."""
-    reasons: list[str] = []
-    if drift > CANARY_DRIFT_TRIGGER:
-        reasons.append(f"canary degraded {drift:.0%} (> {CANARY_DRIFT_TRIGGER:.0%})")
-    if abs(sf - 0.1) < 1e-9:  # SCALING's reference column is sf0.1
-        for name, t in timings.items():
-            ref = scaling_ref.get(name)
-            if ref and ref > 0 and t > ref * (1 + SCALING_DISAGREE_TRIGGER):
-                reasons.append(
-                    f"{name} {t:.3f}s exceeds SCALING reference {ref:.3f}s "
-                    f"by {t / ref - 1:.0%} (> {SCALING_DISAGREE_TRIGGER:.0%})"
-                )
-    return reasons
-
-
-def compact_payload(full: dict) -> dict:
-    """The stdout form of the bench record: contract fields intact
-    (metric/value/unit/queries/sf), bulky evidence summarized by count.
-    Pure so tests/test_bench_guards.py can pin both halves: the driver
-    tail-captures stdout (r12/r13's verbose line outran the capture and
-    parsed as null), while the verbose original goes to BENCH.json."""
-    out = dict(full)
-    comp = full["comparable"]
-    out["comparable"] = {
-        "total": comp["total"],
-        "n_shared": len(comp["shared_queries"]),
-    }
-    guards = dict(full["guards"])
-    guards["second_pass_reason_count"] = len(guards.pop("second_pass_reasons"))
-    out["guards"] = guards
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -426,86 +224,25 @@ def main() -> None:
         queries[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         return time.perf_counter() - t0
 
-    def measure(names_: list[str], reps: int = 3) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name in names_:
-            out[name] = min(run_once(name) for _ in range(reps))
-        return out
-
-    # Idle-host canary gate (r6 verdict item 2): bracket the measured pass
-    # with a cheap fixed-plan query. The gate is DIRECTIONAL: only a
-    # canary that got SLOWER across the pass signals external load
-    # arriving mid-run (the r6 failure mode) and triggers a merged second
-    # pass. A canary that got FASTER is progressive JVM warm-up —
-    # measured: a fresh session's canary floors at ~0.40 s after two runs
-    # but reaches ~0.20 s only after the full pass's hundreds of jobs
-    # deep-JIT the scan path — benign, and exactly how every prior
-    # round's numbers were produced. Both legs are reported either way.
-    CANARY = "scan_parquet_checksum"
-    # One untimed WARM PASS over every headline query before measuring
-    # (r7 methodology change, measured): a fresh JVM's canary floors at
-    # ~0.40 s after two runs but ~0.20 s once the pass's hundreds of jobs
-    # deep-JIT the scan/shuffle paths, and the same progressive warm-up
-    # inflated early-pass queries in r1–r6's cold-pass numbers
-    # (comparable-13: ~9.7 s cold-pass vs ~8.1–8.5 s steady-state on the
-    # same quiet host). Steady-state is the number a long-running cluster
-    # job sees and is ~1 min of extra bench wall; it also makes the
-    # canary bracket meaningful in BOTH directions.
+    # One untimed WARM PASS over every headline query before measuring:
+    # a fresh JVM keeps lowering per-query floors while the pass's hundreds
+    # of jobs JIT-compile the scan and shuffle paths, so a cold pass bills
+    # that warm-up to its early queries.
     for name in names:
         run_once(name)
-    canary_pre = min(run_once(CANARY) for _ in range(3))
-    timings = measure(names)
-    canary_post = min(run_once(CANARY) for _ in range(3))
-    drift = (canary_post - canary_pre) / max(canary_pre, 1e-9)
-    first_pass_drift = drift
-    scaling_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "SCALING.md"
-    )
-    # The disagree guard needs SCALING's column to be a QUIET-host
-    # reference (r9 ADVICE): a reference measured on an already-
-    # contaminated host is inflated and suppresses the guard. Trust it
-    # only when scaling_check.py recorded its own canary bracket within
-    # the same 10% bar, in EITHER direction (r10 ADVICE): a large
-    # NEGATIVE drift means canary_pre ran cold, so the whole reference
-    # table is inflated — exactly the direction that suppresses the
-    # disagree guard. (bench's own second-pass trigger below stays
-    # directional: degradation trips, warm-up doesn't.)
-    scaling_drift = parse_scaling_provenance(scaling_path)
-    scaling_trusted = scaling_reference_trusted(scaling_drift)
-    scaling_ref = parse_scaling_reference(scaling_path) if scaling_trusted else {}
-    if not scaling_trusted:
-        print(
-            "# SCALING reference untrusted (no guard-clean canary "
-            f"provenance; drift={scaling_drift}) — disagree guard disabled",
-            file=sys.stderr,
-        )
-    reasons = second_pass_reasons(drift, timings, scaling_ref, sf)
-    if reasons:
-        for r in reasons:
-            print(f"# guard tripped: {r} — merging second pass", file=sys.stderr)
-        second = measure(names)
-        timings = {n: min(timings[n], second[n]) for n in names}
-        canary_post = min(run_once(CANARY) for _ in range(3))
-        drift = (canary_post - canary_pre) / max(canary_pre, 1e-9)
-
-    timings = {n: round(v, 3) for n, v in timings.items()}
-    total = 0.0
+    timings = {name: round(min(run_once(name) for _ in range(3)), 3) for name in names}
     for name in names:
-        total += timings[name]
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
-    comp_names, comp_total = comparable_subtotal(timings, PREV_ROUND_HEADLINE)
 
     sc = spark.sparkContext
-    full = {
+    record = {
         "metric": "headline_queries_total_wall",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # proof of the parallelism the run ACTUALLY used (r14 verdict
-        # item 1/2: session.py honors $SPARK_GRAFT_CPUS, but with no
-        # evidence in the payload the driver's scaling heuristic
-        # false-positived `suspect_cpus_ignored`).
+        # the core count the run actually used (session.py honors
+        # $SPARK_GRAFT_CPUS), so 4-core and 32-core records are told apart
         "parallelism": {
             "master": sc.master,
             "default_parallelism": sc.defaultParallelism,
@@ -514,43 +251,14 @@ def main() -> None:
             ),
             "cpus_env": os.environ.get("SPARK_GRAFT_CPUS"),
         },
-        # round-over-round comparison, self-describing (r9 verdict
-        # finding 2): the subtotal over the PREVIOUS round's
-        # headline list, plus both lists, so a reader never
-        # recomputes the comparable number from the tail.
-        "comparable": {
-            "prev_round_queries": PREV_ROUND_HEADLINE,
-            "shared_queries": comp_names,
-            "total": comp_total,
-        },
-        "canary": {
-            "query": CANARY,
-            "pre_sec": round(canary_pre, 3),
-            "post_sec": round(canary_post, 3),
-            "drift_pct": round(100 * drift, 1),
-            "first_pass_drift_pct": round(100 * first_pass_drift, 1),
-        },
-        "guards": {
-            "canary_trigger_pct": round(100 * CANARY_DRIFT_TRIGGER, 1),
-            "scaling_disagree_trigger_pct": round(
-                100 * SCALING_DISAGREE_TRIGGER, 1
-            ),
-            "scaling_reference_trusted": scaling_trusted,
-            "scaling_reference_drift_pct": (
-                None if scaling_drift is None else round(100 * scaling_drift, 1)
-            ),
-            "second_pass_reasons": reasons,
-        },
     }
-    # full record to disk (survives any stdout truncation), compact
-    # contract line to stdout (fits the driver's tail capture).
     bench_json = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH.json"
     )
     with open(bench_json, "w") as fh:
-        json.dump(full, fh, indent=1)
+        json.dump(record, fh, indent=1)
         fh.write("\n")
-    print(json.dumps(compact_payload(full)))
+    print(json.dumps(record))
 
 
 if __name__ == "__main__":

@@ -500,7 +500,8 @@ def _gather_ready(bidir: DataFrame) -> DataFrame:
     executed plan: one BroadcastQueryStage per round, 0 ReusedExchange;
     forced-SMJ scale twin: 0 ReusedExchange —
     plans/r15/graph_kcore_hindex_smj_twin_before.txt). The coalesce
-    (col, 0) wrappers make the attributes non-nullable (values
+    (col, 0) wrappers, 0 cast to each column's own type so int ids stay
+    int, make the attributes non-nullable (values
     unchanged — nulls are impossible), the inferred filters constant-
     fold away, every round's edge subtree becomes the bare RDD scan,
     and the stage cache reuses it: the after-plans show ReusedExchange
@@ -519,10 +520,13 @@ def _gather_ready(bidir: DataFrame) -> DataFrame:
     pre-partitioning anyway. The stage-cache reuse above delivers the
     verdict's goal (one edge exchange per segment, 'or AQE
     equivalent') without pinning a partition count at all."""
+    types = dict(bidir.dtypes)
     return (
         bidir.select(
-            F.coalesce(F.col("node"), F.lit(0).cast("bigint")).alias("node"),
-            F.coalesce(F.col("other"), F.lit(0).cast("bigint")).alias("other"),
+            *(
+                F.coalesce(F.col(c), F.lit(0).cast(types[c])).alias(c)
+                for c in ("node", "other")
+            )
         )
         .localCheckpoint(eager=False)
     )

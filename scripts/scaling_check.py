@@ -64,49 +64,23 @@ def _run(spark, fn, sf_dir: str) -> float:
     return best
 
 
+#: fixed-plan query that brackets the splittable-scan twin; a bracket
+#: drift above SPLIT_DRIFT_TRIGGER labels the twin's cells noisy
 CANARY = "scan_parquet_checksum"
-#: same bar as bench.py's CANARY_DRIFT_TRIGGER — keep in sync
-CANARY_DRIFT_TRIGGER = 0.10
+SPLIT_DRIFT_TRIGGER = 0.10
 
 
 def main() -> None:
     spark = get_spark("scaling_check")
     queries = all_queries()
-    # warmup: touch both datasets once so neither SF pays first-read cost
-    for sf in SFS:
-        queries[CANARY].fn(spark, sf).write.format("noop").mode(
-            "overwrite"
-        ).save()
     # One untimed WARM PASS over every measured query at both SFs (the
-    # bench.py r7 methodology, applied here in r10): the first regenerate
-    # with the canary bracket recorded drift -47.6% — the pass started on
-    # a cold JVM, so the early table rows were deep-JIT-inflated, which
-    # is the UNSAFE direction for a disagree-guard reference (an inflated
-    # reference suppresses the guard). Steady-state first, then measure.
+    # bench.py methodology): a pass started on a cold JVM bills JIT
+    # warm-up to its early table rows. Steady-state first, then measure.
     for name in HEADLINE + EXTRA:
         for sf in SFS:
             queries[name].fn(spark, sf).write.format("noop").mode(
                 "overwrite"
             ).save()
-    # Canary bracket (r9 ADVICE): bench.py's SCALING-disagree guard uses
-    # this file's sf0.1 column as the quiet-host reference, so the
-    # reference must prove ITS OWN host was quiet — otherwise an inflated
-    # reference suppresses the guard in exactly the contaminated case it
-    # exists for. bench.py trusts the column only when the recorded drift
-    # is within the same 10% bar.
-    # Dedicated canary warm-up BEFORE the pre bracket (r11): the bracket
-    # exists to detect host contamination, but C2 keeps lowering the
-    # canary's own floor for the first ~10 executions, which reads as a
-    # large NEGATIVE drift (pre inflated) and now — correctly, per the
-    # symmetric r10-ADVICE bar — distrusts the whole table. Drive the
-    # canary to its JIT floor first so the bracket measures the HOST,
-    # not the compiler (measured: min-of-3 cold pre ran 0.214 s vs a
-    # 0.172 s post on an otherwise quiet run — a -19.7% false alarm).
-    for _ in range(8):
-        queries[CANARY].fn(spark, SFS[1]).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    canary_pre = min(_run(spark, queries[CANARY].fn, SFS[1]) for _ in range(3))
 
     rows = []
     for name in HEADLINE + EXTRA:
@@ -136,79 +110,13 @@ def main() -> None:
             print(f"audit {name}: {n} rows{flag}")
     audit.sort()
 
-    # ---- second min-merged timed pass (r11) ----
-    # The JVM keeps lowering floors for the first ~20 minutes of heavy
-    # work, so FIRST-pass cells measured early sit 10-20% above the
-    # steady state the canary post-bracket reads — which the (correct)
-    # symmetric trust bar then flags as contamination. Re-measure every
-    # cell once the JVM is deep-warm and keep the min: every reference
-    # cell becomes an end-state floor, the bracket compares like with
-    # like, and bench.py's disagree guard gets a reference that cannot
-    # be warm-up-inflated. (Three quiet-host regenerates measured the
-    # single-pass bracket at -19.7%, -22.8%, -10.2% — all JIT slope.)
-    # r12 refinement: the merge is a LOOP, not a fixed second pass — two
-    # r12 regenerates measured the canary cell at -22.8%/-18.8% vs post
-    # even after one merge pass (today's JIT slope outlasts pass 2's
-    # early rows), so keep min-merging passes until the canary's own
-    # cell converges onto the post bracket (the run's steady-state
-    # floor) or the pass budget runs out. This is bench.py's own
-    # disagree philosophy: deepen min-of-N exactly while the evidence
-    # says the early cells are not floors yet.
-    for merge_pass in range(1, 4):
-        merged = []
-        for name, a, b, _r in rows:
-            fn = queries[name].fn
-            a2 = min(a, _run(spark, fn, SFS[0]))
-            b2 = min(b, _run(spark, fn, SFS[1]))
-            merged.append((name, a2, b2, b2 / a2))
-        rows = merged
-        cell = next((b for n, _a, b, _r in rows if n == CANARY), None)
-        if cell is None:
-            # r12 ADVICE: if CANARY ever leaves the headline set the
-            # convergence probe has no reference cell — degrade to a
-            # single merge pass with a loud note instead of a TypeError.
-            print(
-                f"merge pass {merge_pass}: canary {CANARY!r} not in the "
-                "timed table — skipping convergence probe (fix CANARY)"
-            )
-            break
-        post_probe = min(_run(spark, queries[CANARY].fn, SFS[1]) for _ in range(3))
-        drift_probe = (post_probe - cell) / max(cell, 1e-9)
-        print(
-            f"merge pass {merge_pass} done (min per cell); canary cell "
-            f"{cell:.3f}s vs probe {post_probe:.3f}s ({100 * drift_probe:+.1f}%)"
-        )
-        if abs(drift_probe) <= CANARY_DRIFT_TRIGGER:
-            break
-
-    canary_post = min(_run(spark, queries[CANARY].fn, SFS[1]) for _ in range(3))
-    # The trust bracket compares canary_post against the canary's OWN
-    # TIMED TABLE CELL (an early HEADLINE row), not the standalone pre
-    # probe: the cell is produced by the same measurement pipeline as
-    # every reference cell, so cell ≈ post proves the table rows were
-    # at steady state end to end, while a cold standalone probe kept
-    # reading ~25% above the floor on verifiably quiet runs (r11
-    # measured: pre 0.227 s vs cell 0.178 s vs post 0.175 s — the -20%
-    # "contamination" was the probe, not the table). Symmetric bar
-    # (r10 ADVICE): cell >> post = early-row inflation (disarms the
-    # disagree guard), post >> cell = late host contamination.
-    canary_cell = next((b for n, _a, b, _r in rows if n == CANARY), canary_pre)
-    canary_drift = (canary_post - canary_cell) / max(canary_cell, 1e-9)
-    verdict = (
-        "guard-clean"
-        if abs(canary_drift) <= CANARY_DRIFT_TRIGGER
-        else "CONTAMINATED — re-run on a quiet host"
-    )
-
     # ---- splittable-scan twin (r10 verdict task 5) ----
     # Driver parquet = ONE row group per table, so a scan cannot split
     # and everything below a query's first exchange runs in one task.
     # Re-time every >2.5× entrant against a scratch copy of the same
     # sf0.1 data repartitioned into 32 files: if the ratio was the
     # single-row-group artifact, the split scan parallelizes the map
-    # stage and the time collapses. Measured OUTSIDE the canary bracket
-    # (these rows are explanatory, never a guard reference — bench.py's
-    # parser stops at the first table).
+    # stage and the time collapses.
     import shutil
     import tempfile
 
@@ -234,11 +142,10 @@ def main() -> None:
                     ).save()
                 except Exception:  # noqa: BLE001
                     pass
-            # This section runs OUTSIDE the main canary bracket, at the
-            # tail of a long session — in r11 that tail produced three
-            # sub-1x junk cells that quiet-host min-of-3 controls could
-            # not reproduce (r12). Bracket it with its own canary so a
-            # noisy tail self-labels.
+            # This section runs at the tail of a long session — in r11
+            # that tail produced three sub-1x junk cells that quiet-host
+            # min-of-3 controls could not reproduce (r12). Bracket it
+            # with its own canary so a noisy tail self-labels.
             split_pre = _run(spark, queries[CANARY].fn, SFS[1])
             for name, _a, b, r in hot:
                 try:
@@ -261,25 +168,14 @@ def main() -> None:
         "# SCALING — headline-query wall time, sf0.01 vs sf0.1 (10× data)",
         "",
         "Auto-generated by `scripts/scaling_check.py` (min-of-2 per cell "
-        "per pass, min-merged across timed passes until the canary cell "
-        "converges onto the end-of-run floor — r12; "
-        "one warm session, noop sink — executor-complete time). Ratios "
+        "after an untimed warm pass; one warm session, noop sink — "
+        "executor-complete time). Ratios "
         "near 1× mean the query sits on Spark's fixed per-query floor at "
         "this size; ratios should approach the 10× data ratio as per-row "
         "work dominates, and must never exceed it by much — super-linear "
         "growth would be the signature of an accidental pair explosion "
         "or spilled shuffle. See PLANS.md for the plans behind these "
         "numbers.",
-        "",
-        f"Canary: table cell {canary_cell:.3f} s, post {canary_post:.3f} s, "
-        f"drift {100 * canary_drift:+.1f}% — {verdict} "
-        f"(trigger {100 * CANARY_DRIFT_TRIGGER:.0f}%; standalone "
-        f"pre-probe {canary_pre:.3f} s, informational — a cold probe "
-        "reads above the steady-state floor the table cells sit on, "
-        "so the trust bracket compares the canary's own early TABLE "
-        "cell against its post re-measurement instead). bench.py's "
-        "SCALING-disagree guard only trusts this table when this line "
-        "records a guard-clean run.",
         "",
         "| query | sf0.01 (s) | sf0.1 (s) | ratio |",
         "| --- | --- | --- | --- |",
@@ -315,8 +211,8 @@ def main() -> None:
         "single-row-group measurement artifact — the plan parallelizes "
         "the moment the input can split — and retires the entry as a "
         "scale worry (its analytical-ceiling test remains as a cheap "
-        "conservation invariant). Never used as a guard reference. "
-        "Since r12 this section carries its OWN canary bracket (below): "
+        "conservation invariant). "
+        "Since r12 this section carries its own canary bracket (below): "
         "it runs at the tail of a long session, and the r11 table's "
         "three sub-1× cells (multimodal_cdc_chunk_dedup 0.36×, "
         "dedup_substring_removal 0.47×, window_rolling_corr 0.66×) did "
@@ -349,7 +245,7 @@ def main() -> None:
                 f"Split-twin canary bracket: drift {100 * split_drift:+.1f}% — "
                 + (
                     "clean."
-                    if abs(split_drift) <= CANARY_DRIFT_TRIGGER
+                    if abs(split_drift) <= SPLIT_DRIFT_TRIGGER
                     else "NOISY TAIL — distrust sub-1× cells below."
                 )
             ]

@@ -213,12 +213,17 @@ def test_kcore_converged_on_deep_graph(spark):
     assert after8 != expected, "graph not deep enough — 8 rounds already converged"
     assert expected[110] == 1 and expected[200] == 4  # path is 1-core, clique 4-core
 
+    from pyspark.sql.types import IntegerType
+
     from pyspark_for_ebook_classification_spark.operators.graphs import kcore_converged
 
     bidir = spark.createDataFrame(
         [(a, b) for a, b in edges] + [(b, a) for a, b in edges], "node int, other int"
     )
-    got = {r["node"]: r["coreness"] for r in kcore_converged(bidir).collect()}
+    out = kcore_converged(bidir)
+    # the caller's node type survives: int ids are not widened to bigint
+    assert out.schema["node"].dataType == IntegerType()
+    got = {r["node"]: r["coreness"] for r in out.collect()}
     assert got == expected
 
     # hub-safe variant (r7 ADVICE): the windowed h-index round must reach

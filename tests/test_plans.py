@@ -136,6 +136,27 @@ def test_simhash_vocab_join_not_mandatory_broadcast(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+def test_kcore_rounds_reuse_one_edge_exchange(spark, sf_dir):
+    """graph_kcore_hindex's h-index rounds all gather over the same
+    checkpointed edge list, so under forced sort-merge joins (the
+    cluster-scale strategy) the stage cache must reuse ONE
+    hashpartitioning(other) exchange instead of re-shuffling the edges
+    every round. A lineage change that leaves the edge attributes
+    nullable brings back per-round isnotnull filters and breaks it."""
+    import re
+
+    q = all_queries()["graph_kcore_hindex"]
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plan = executed_plan_string(q.fn(spark, sf_dir))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert re.search(
+        r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(other#", plan
+    ), plan
+
+
 def test_decontaminate_broadcasts_eval_grams(spark, sf_dir):
     """The eval-suite gram set must broadcast: sort-merging it would
     shuffle the 100 TB train gram stream on a string key for nothing."""
